@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated star-schema snapshot (TESTDATA.md).
   *
@@ -10,6 +13,27 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * catalog tables; the loader is the single seam where that swap happens
   * (mirrors the snapshot-reader role of the reference's psycopg2 extract,
   * see reference src/main/py/ct_data.py:69-97).
+  *
+  * Schema discovery is cached per session. Spark's parquet schema
+  * inference launches a one-task Spark job per read (~85 ms on a warmed
+  * 4-core session, more than a small query's own tasks), so [[load]] and
+  * [[validate]] both go through [[scan]], which infers a table's schema
+  * once and then reads with `spark.read.schema(cached)`. An entry is
+  * keyed by the session and the table's qualified path, and it is reused
+  * only while both of these still match what inference read:
+  *  - every leaf file's name, length and modification time, listed on
+  *    every call (a filesystem stat, no Spark job), so a table rewritten
+  *    in place is re-inferred on its next read;
+  *  - the session's parquet-reader conf (`spark.sql.parquet.*`,
+  *    `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive`), so e.g.
+  *    unsetting [[GraftSession.NanosKey]] makes a nanos snapshot fail
+  *    fast again instead of reading under a schema the conf no longer
+  *    allows.
+  * Only discovery is cached: the events `ts` normalization,
+  * [[guardLegacyLongTs]] and [[GraftSession.requireNanosConf]] run on
+  * every load. The tables are deliberately not registered in the
+  * session catalog, which would also cache the file listing and could
+  * serve a rewritten table stale.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -18,7 +42,52 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") loadEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else scan(spark, s"$dir/$name.parquet")
+
+  /** What schema inference read: leaf files as (path, length, mtime)
+    * and the session's parquet-reader conf. */
+  private final case class ScanKey(files: Seq[(String, Long, Long)],
+      conf: Map[String, String])
+
+  /** Per session (weakly held, so a stopped session's entries go with
+    * it): qualified table path → the key inference ran under and the
+    * schema it produced. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, (ScanKey, StructType)]]())
+
+  private def readerConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }
+
+  /** The one read path for snapshot tables: the cached schema when the
+    * [[ScanKey]] still matches, otherwise Spark's own inference (whose
+    * result is stored). A path that cannot be listed is not cached, and
+    * the plain read raises Spark's usual error for it. */
+  private def scan(spark: SparkSession, path: String): DataFrame = {
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(hPath).toString
+    def leaves(p: Path): Seq[FileStatus] = fs.listStatus(p).toSeq
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s))
+    val key =
+      try Some(ScanKey(
+        leaves(hPath).map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+          .sortBy(_._1),
+        readerConf(spark)))
+      catch { case _: java.io.FileNotFoundException => None }
+    val cache = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    key.flatMap(k => Option(cache.get(qualified)).filter(_._1 == k)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => cache.put(qualified, (k, df.schema)))
+        df
+    }
+  }
 
   /** Per-table scanned-schema expectations: column → the catalog type
     * strings the loaders and declared queries are known to handle.
@@ -72,14 +141,17 @@ object Tables {
     * `SnapshotIngest.headerDrift` philosophy applied to the fixture
     * seam: a snapshot writer changing an encoding (as the events table's
     * ts has, twice) surfaces here as a named diff naming the table, the
-    * column, and both types. Footer-only reads — costs one file listing
-    * per table, no data scan. Extra columns are tolerated (queries
-    * select by name; a snapshot growing a column breaks nothing). */
+    * column, and both types. No data scan: the schema comes from
+    * [[scan]], so a table whose schema is not yet cached costs one
+    * one-task inference job and a cached one costs only a file listing
+    * (the later [[load]]s of a validated snapshot then hit the cache).
+    * Extra columns are tolerated (queries select by name; a snapshot
+    * growing a column breaks nothing). */
   def validate(spark: SparkSession, dir: String,
       tables: Seq[String] = all): Unit = {
     val diffs = tables.flatMap { t =>
       try {
-        val scanned = spark.read.parquet(s"$dir/$t.parquet").schema
+        val scanned = scan(spark, s"$dir/$t.parquet").schema
         // events.ts scanning as LONG is a legal legacy encoding ONLY
         // when the footer agrees it is nanos — run the stale-metadata
         // arbitration here too, or the gate would bless a snapshot
@@ -151,7 +223,7 @@ object Tables {
     // intercept that one failure so the remedy is named here, not in a
     // PARQUET_TYPE_ILLEGAL wall of text
     val raw =
-      try spark.read.parquet(s"$dir/events.parquet")
+      try scan(spark, s"$dir/events.parquet")
       catch {
         case e: Exception
             if Option(e.getMessage).exists(_.contains("NANOS")) =>

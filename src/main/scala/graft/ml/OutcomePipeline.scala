@@ -83,7 +83,13 @@ object OutcomePipeline {
     // depend on observed categories + handleInvalid=keep)
     val inputSize = trainVec.select("features").head()
       .getAs[org.apache.spark.ml.linalg.Vector](0).size
-    Fitted(prep, classifier(inputSize).fit(trainVec), train, validate, test)
+    val model = classifier(inputSize).fit(trainVec)
+    // trainVec's plan carries the fitted prep model, so no later fit can
+    // reuse its cache entry — release it here or every fit leaks one.
+    // `frame` stays cached: its plan is identical across fits, and the
+    // CacheManager serves the next fit (and the split counts) from it.
+    trainVec.unpersist()
+    Fitted(prep, model, train, validate, test)
   }
 
   /** M9: test-set accuracy. Returns (accuracy, rowCounts). */

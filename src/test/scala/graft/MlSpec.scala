@@ -18,6 +18,18 @@ class MlSpec extends AnyFunSuite with SparkSpec {
     assert(accuracy >= 0.55, s"accuracy $accuracy below floor")
   }
 
+  test("repeated trainEval holds no more cached data and keeps its accuracy") {
+    // each fit's assembled training vectors are released once the
+    // classifier is fit; the shared feature frame stays cached
+    val sc = spark.sparkContext
+    val (first, _) = OutcomePipeline.trainEval(spark, sf0001)
+    val held = sc.getPersistentRDDs.size
+    val (second, _) = OutcomePipeline.trainEval(spark, sf0001)
+    assert(sc.getPersistentRDDs.size == held,
+      s"persistent RDDs grew from $held to ${sc.getPersistentRDDs.size}")
+    assert(second == first)
+  }
+
   test("outcome pipeline at sf0.1: accuracy + confusion reported, floor pinned") {
     // the reference's only quality signal is a printed accuracy
     // (ct_estimator.py:133); this records ours at the largest local SF
